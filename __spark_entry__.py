@@ -908,6 +908,20 @@ def _events_file_stream(spark: SparkSession, sf: str) -> DataFrame:
     return stream
 
 
+def _drain_to_memory(stream: DataFrame, sink: str, mode: str) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into the in-memory
+    table ``sink`` with output mode ``mode`` and return that table."""
+    (
+        stream.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.table(sink)
+
+
 def _q_streaming_hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
     # an ACTUAL Structured Streaming run inside the correctness gate:
     # file-source stream over events.parquet -> tumbling 1 h window per
@@ -936,16 +950,7 @@ def _q_streaming_hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
             .alias("value_sum"),
         ],
     )
-    sink = "streaming_hourly_counts_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_hourly_counts_sink", "complete")
 
 
 def _q_streaming_stateful_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -965,22 +970,13 @@ def _q_streaming_stateful_stats(spark: SparkSession, sf: str) -> DataFrame:
         "value_micros", (F.col("value") * 1_000_000).cast("long")
     )
     stats = stateful_running_sum_exact(stream, key="event_type")
-    sink = "streaming_stateful_stats_sink"
-    q = (
-        stats.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # recover the FINAL state per key from the update-mode emission
     # stream: record_count is monotone unconditionally (it only ever
     # increments), so max_by picks the last emission's sum — unlike
     # max(value_sum_micros), which would pick an intermediate sum if
     # values were negative and the source split into many micro-batches
     return (
-        spark.table(sink)
+        _drain_to_memory(stats, "streaming_stateful_stats_sink", "update")
         .groupBy("key")
         .agg(
             F.max("record_count").alias("record_count"),
@@ -1016,16 +1012,7 @@ def _q_streaming_enriched_counts(spark: SparkSession, sf: str) -> DataFrame:
         F.count("*").alias("record_count"),
         F.sum("value_micros").alias("value_sum_micros"),
     )
-    sink = "streaming_enriched_counts_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_enriched_counts_sink", "complete")
 
 
 def _q_streaming_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
@@ -1040,16 +1027,7 @@ def _q_streaming_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    sink = "streaming_dedup_keys_sink"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(deduped, "streaming_dedup_keys_sink", "append")
 
 
 def _q_streaming_session_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -1070,16 +1048,7 @@ def _q_streaming_session_stats(spark: SparkSession, sf: str) -> DataFrame:
             .alias("value_sum"),
         ],
     )
-    sink = "streaming_session_stats_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_session_stats_sink", "complete")
 
 
 def _q_streaming_click_purchase(spark: SparkSession, sf: str) -> DataFrame:
@@ -1112,16 +1081,7 @@ def _q_streaming_click_purchase(spark: SparkSession, sf: str) -> DataFrame:
         F.col("l.click_id").alias("click_id"),
         F.col("r.purchase_id").alias("purchase_id"),
     )
-    sink = "streaming_click_purchase_sink"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(joined, "streaming_click_purchase_sink", "append")
 
 
 def _q_session_window_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -5234,16 +5194,7 @@ def _q_streaming_sliding_counts(spark: SparkSession, sf: str) -> DataFrame:
             .alias("value_sum"),
         ],
     )
-    sink = "streaming_sliding_counts_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_sliding_counts_sink", "complete")
 
 
 def _q_lsh_rescore_tfidf(spark: SparkSession, sf: str) -> DataFrame:

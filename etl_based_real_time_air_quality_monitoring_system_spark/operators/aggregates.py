@@ -355,7 +355,6 @@ def equi_depth_bins(
     value_col: str = "value",
     tiebreak_col: str = "event_id",
     n_bins: int = 10,
-    coarse: Column | None = None,
 ) -> DataFrame:
     """Exact equi-depth (quantile) binning — SQL-ntile semantics over
     the (value, tiebreak) total order — WITHOUT the single-partition
@@ -365,8 +364,8 @@ def equi_depth_bins(
 
     Distributed global rank, all deterministic DataFrame ops:
 
-    1. bucket rows by a low-cardinality ``coarse`` prefix of the sort
-       key (default ``floor(value)``) and count each bucket;
+    1. bucket rows by a low-cardinality coarse prefix of the sort key,
+       ``floor(value)``, and count each bucket;
     2. prefix-sum those counts into per-bucket rank offsets — a
        global window over ONLY the coarse histogram (≤ thousands of
        rows, the aggregate-then-broadcast pattern, not a data-sized
@@ -380,15 +379,12 @@ def equi_depth_bins(
 
     Exactly matches SQL ntile because coarse is a function of the
     leading sort key, so (coarse, value, tiebreak) ordering == global
-    ordering.  At 100 TB pick ``coarse`` so each bucket fits an
-    executor (it bounds the per-window partition size) — anything
-    monotone in the value works.  ``sketch_profile`` is the
+    ordering.  ``sketch_profile`` is the
     approximate 100 TB shortcut when cut points need not be exact.
     """
     from pyspark.sql import Window
 
-    ck = (coarse if coarse is not None
-          else F.floor(F.col(value_col)).cast("long")).alias("_ck")
+    ck = F.floor(F.col(value_col)).cast("long").alias("_ck")
     d = df.select(F.col(value_col), F.col(tiebreak_col), ck)
     counts = d.groupBy("_ck").agg(F.count("*").alias("_cnt"))
     # global window over the coarse HISTOGRAM only (tiny by design)

@@ -456,7 +456,6 @@ def simhash_near_pairs(
 def levenshtein_near_pairs(
     df: DataFrame,
     text_col: str,
-    block: Column | None = None,
     max_dist: int = 2,
 ) -> DataFrame:
     """Edit-distance near-dup pairs over the DISTINCT value domain.
@@ -468,18 +467,16 @@ def levenshtein_near_pairs(
        pairing (a fact table with 10^9 rows but 10^5 distinct names
        pays 10^5-scale cost; the map back to rows is a broadcast join
        the caller can do if needed).
-    2. **Blocking**: only strings sharing ``block`` (default: last
-       whitespace token) are compared, turning one global O(d^2) into
-       many small per-block quadratics.
+    2. **Blocking**: only strings sharing their last whitespace token
+       are compared, turning one global O(d^2) into many small
+       per-block quadratics.
 
     Output: (name_a, name_b, distance), name_a < name_b, distance <=
     ``max_dist``.  Spark's ``levenshtein`` is the classic unit-cost
     edit distance, identical to DuckDB's ``levenshtein`` — exact
     integer, oracle-safe.
     """
-    if block is None:
-        # default block: last whitespace token of the (renamed) value
-        block = F.element_at(F.split(F.trim(F.col("name")), r"\s+"), -1)
+    block = F.element_at(F.split(F.trim(F.col("name")), r"\s+"), -1)
     names = (
         df.select(F.col(text_col).alias("name"))
         .where(F.col("name").isNotNull())

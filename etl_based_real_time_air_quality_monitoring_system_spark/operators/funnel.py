@@ -74,7 +74,6 @@ def retention_cohorts(
     df: DataFrame,
     key: str,
     ts: str,
-    max_weeks: int | None = None,
 ) -> DataFrame:
     """Cohort retention matrix in long form: (cohort_week, week_offset,
     active_users) where ``cohort_week`` is the epoch-week of the user's
@@ -98,8 +97,6 @@ def retention_cohorts(
             )
         ).alias("week_offset"),
     )
-    if max_weeks is not None:
-        marked = marked.filter(F.col("week_offset") <= max_weeks)
     return marked.groupBy("cohort_week", "week_offset").agg(
         F.countDistinct(key).alias("active_users")
     )

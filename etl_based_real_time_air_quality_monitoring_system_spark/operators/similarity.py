@@ -522,7 +522,6 @@ def cosine_near_dup_lsh(
     bands: int = 4,
     seed: int = 42,
     scale: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs at scale: random-hyperplane signatures
     split into ``bands`` bands; a pair becomes a candidate iff some
@@ -531,7 +530,8 @@ def cosine_near_dup_lsh(
     exact-verified against ``threshold``.
 
     Output schema matches :func:`cosine_near_dup_pairs`; recall < 1 by
-    construction (measured floor asserted in tests).
+    construction (measured floor asserted in tests); an empty input
+    yields an empty frame with that schema.
 
     SIZE THE BUCKETS WITH THE CORPUS: random (non-dup) vectors collide
     in a band with probability 2^-(n_planes/bands), so candidate mass
@@ -542,9 +542,12 @@ def cosine_near_dup_lsh(
     The signature packs into one long, so n_planes <= 63; for more
     bits raise ``bands``.
     """
-    if dim is None:
-        dim = len(df.select(emb_col).head()[0])
-    planes = hyperplanes(dim, n_planes, seed)
+    first = df.select(emb_col).head()
+    if first is None:
+        return df.sparkSession.createDataFrame(
+            [], "id_a long, id_b long, cosine_sim double"
+        )
+    planes = hyperplanes(len(first[0]), n_planes, seed)
     per_band = n_planes // bands
     emb = _as_double_array(emb_col)
     sigged = df.select(F.col(id_col).alias("_id"), emb.alias("_e")).withColumn(
@@ -749,7 +752,6 @@ def ivf_centroids_kmeans(
     emb_col: str,
     n_centroids: int = 8,
     iters: int = 3,
-    sample_fraction: float | None = None,
 ) -> np.ndarray:
     """Lloyd-refined IVF centroids: start from the deterministic
     first-k init (ivf_centroids) and run ``iters`` distributed k-means
@@ -757,16 +759,12 @@ def ivf_centroids_kmeans(
     posexplode -> groupBy(cluster, dim).avg.
 
     Each iteration is one scan + one narrow (cluster_id, dim, value)
-    shuffle; only k*d floats ever reach the driver.  At 100 TB pass
-    ``sample_fraction`` — centroid quality needs a sample, not the
-    corpus (deterministic seed, so runs are reproducible).  Refinement
+    shuffle; only k*d floats ever reach the driver.  Refinement
     shifts recall/balance only, never correctness: probing re-scores
     candidates exactly, and exhaustive probing equals brute force
     regardless of where the centroids sit.
     """
     base = df.select(F.col(id_col), _as_double_array(emb_col).alias("_e"))
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=42)
     centroids = ivf_centroids(base, id_col, "_e", n_centroids)
     dim = centroids.shape[1]
     for _ in range(iters):
@@ -1435,24 +1433,19 @@ def pq_adc_topk(
     query_vec: Sequence[float],
     codebooks: np.ndarray,
     k: int = 10,
-    codes_col: str | None = None,
 ) -> DataFrame:
-    """Approximate top-k by asymmetric distance computation: encode
-    (or reuse a stored ``codes_col``), then distance(query, doc) =
-    sum_j LUT[j][code_j] — m integer lookups per row, no vector math
-    at query time.  Plan is scan -> project -> TakeOrderedAndProject:
-    zero shuffle, and with codes stored the scan reads m bytes per
-    row instead of the embedding column."""
+    """Approximate top-k by asymmetric distance computation: encode,
+    then distance(query, doc) = sum_j LUT[j][code_j] — m integer
+    lookups per row, no vector math at query time.  Plan is scan ->
+    project -> TakeOrderedAndProject: zero shuffle."""
     lut = pq_adc_lut(query_vec, codebooks)
-    if codes_col is None:
-        if "_pqc" in df.columns:
-            raise ValueError("pq_adc_topk: reserved column _pqc in input")
-        df = pq_encode(df, id_col, emb_col, codebooks, out_col="_pqc")
-        codes_col = "_pqc"
+    if "_pqc" in df.columns:
+        raise ValueError("pq_adc_topk: reserved column _pqc in input")
+    df = pq_encode(df, id_col, emb_col, codebooks, out_col="_pqc")
     # one generated SQL expression (constant-folded literal arrays
     # indexed by the code column) for the same py4j-chattiness reason
     # as pq_encode
-    dist = _lut_dist_expr(lut, f"`{codes_col}`")
+    dist = _lut_dist_expr(lut, "`_pqc`")
     scored = df.select(
         F.col(id_col), F.expr(f"CAST({dist} AS BIGINT)").alias("adc_dist")
     )
@@ -1882,7 +1875,6 @@ def pq_codebooks_kmeans(
     n_subspaces: int = 8,
     n_codes: int = 16,
     iters: int = 3,
-    sample_fraction: float | None = None,
 ) -> np.ndarray:
     """Lloyd-refined PQ codebooks (the :func:`ivf_centroids_kmeans`
     recipe per subspace): start from the deterministic first-k init
@@ -1892,16 +1884,13 @@ def pq_codebooks_kmeans(
 
     Each iteration is one scan + one narrow (j, code, dim, sum/count)
     shuffle bounded by m*k*sub cells; only m*k*sub floats reach the
-    driver.  At 100 TB pass ``sample_fraction`` — codebook quality
-    needs a sample, not the corpus.  Refinement shifts the
+    driver.  Refinement shifts the
     distortion/recall trade-off only, never correctness: ADC ranks
     whatever codebooks it is given deterministically, so gates keep
     the sampled-init codebooks (bit-stable) while production can
     train.  Means are floored to integer micros so refined codebooks
     stay exactly representable cross-engine."""
     base = df.select(F.col(id_col), _as_double_array(emb_col).alias("_e"))
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=42)
     cb = pq_codebooks(base, id_col, "_e", n_subspaces, n_codes)
     m, n_codes_eff, sub = cb.shape
     for _ in range(iters):

@@ -21,12 +21,12 @@ def top_k(
     df: DataFrame,
     order_by: Sequence[str],
     k: int,
-    ascending: bool = False,
     tie_break: str | None = None,
 ) -> DataFrame:
-    """O5 — deterministic top-k: sort columns + an explicit unique
-    tie-break column so the selected *set* is stable across engines."""
-    cols = [F.col(c).asc() if ascending else F.col(c).desc() for c in order_by]
+    """O5 — deterministic top-k: sort columns descending + an explicit
+    unique tie-break column (ascending) so the selected *set* is stable
+    across engines."""
+    cols = [F.col(c).desc() for c in order_by]
     if tie_break:
         cols.append(F.col(tie_break).asc())
     return df.orderBy(*cols).limit(k)

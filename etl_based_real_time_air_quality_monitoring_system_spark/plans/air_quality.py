@@ -34,22 +34,17 @@ from ..sources.writers import write_partitioned_parquet, write_single_csv
 SAMPLE_COLUMNS = ("location", "temp_c", "humidity", "pm2_5", "air_quality_index", "pollution_score")
 
 
-def clean_and_transform(df: DataFrame, parse_string_ts: bool = False) -> DataFrame:
+def clean_and_transform(df: DataFrame) -> DataFrame:
     """``clean_and_transform_data`` (spark_processor.py:77-139):
     dedup -> not-null filters -> derive band/category/date/calendar/
     score, as two collapsed projections."""
     cleaned = drop_null_rows(exact_dedup(df), ["location", "temp_c", "timestamp"])
-    ts = (
-        F.to_timestamp(F.col("timestamp"))
-        if parse_string_ts
-        else F.col("timestamp")
-    )
     return cleaned.withColumns(
         {
             "air_quality_index": aqi_band("pm2_5"),
             "temperature_category": temp_category("temp_c"),
             "processing_date": F.current_date(),
-            **calendar_parts(ts),
+            **calendar_parts(F.col("timestamp")),
             "pollution_score": pollution_score(),
         }
     )

@@ -227,7 +227,6 @@ def assemble_corpus(
     id_col: str = "doc_id",
     source_col: str = "source",
     shard_salt: str = "shard:v1",
-    materialize: bool = True,
 ) -> DataFrame:
     """The END-TO-END corpus assembly recipe, composed entirely from
     the registered operators: ``prepare_corpus`` (exact dedup +
@@ -246,11 +245,9 @@ def assemble_corpus(
     histograms.  The mixture and budget stages each need a bounded
     driver statistic over the filtered corpus, so ``kept`` is
     persisted for the duration of the call and released before
-    returning; with ``materialize=True`` (default) the budget-bounded
-    result is eagerly checkpointed so the expensive dedup+filter
-    pipeline runs exactly once no matter how often the caller acts on
-    the result (set False for budgets too large to pin to executor
-    storage — the caller then owns caching).
+    returning; the budget-bounded result is eagerly checkpointed so
+    the expensive dedup+filter pipeline runs exactly once no matter how
+    often the caller acts on the result.
     """
     from ..operators.sampling import (
         hash_bucket,
@@ -262,17 +259,11 @@ def assemble_corpus(
     try:
         mixed = mixture_sample(kept, source_col, id_col, weights)
         fitted = token_budget_prefix(mixed, id_col, F.col("n_tokens"), token_budget)
-        out = fitted.withColumn(
+        return fitted.withColumn(
             "shard", hash_bucket(F.col(id_col), n_shards, shard_salt)
-        )
-        if materialize:
-            out = out.localCheckpoint(eager=True)
-        return out
+        ).localCheckpoint(eager=True)
     finally:
         # always release: the persist pays for the bounded collects
-        # INSIDE this call (mixture counts + budget histogram).  With
-        # materialize=False the caller's later actions recompute the
-        # lineage — by design, the caller owns caching then; keeping
-        # `kept` pinned would leak executor storage for the session
-        # with no handle to release it.
+        # INSIDE this call (mixture counts + budget histogram); the
+        # checkpointed result no longer needs it.
         kept.unpersist()

@@ -54,15 +54,11 @@ def kafka_sink(
     bootstrap_servers: str,
     topic: str = DEFAULT_TOPIC,
     checkpoint: str | None = None,
-    key_col: str | None = None,
 ) -> DataStreamWriter:
     """S2 — JSON-encode the full row into ``value`` (producer.py:24's
     serializer as ``to_json(struct(*))``), ``acks=all`` durability
     (producer.py:25)."""
-    cols = [F.to_json(F.struct("*")).alias("value")]
-    if key_col:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    out = df.select(*cols)
+    out = df.select(F.to_json(F.struct("*")).alias("value"))
     writer = (
         out.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

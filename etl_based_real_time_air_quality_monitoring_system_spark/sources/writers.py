@@ -166,13 +166,9 @@ def write_orc(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    partition_cols: tuple[str, ...] = (),
 ) -> None:
     """ORC sink — the second columnar format Spark ships natively
     (zlib by default, same predicate-pushdown/row-group-skipping
     contract as parquet).  Interop escape hatch for Hive-era
     consumers; parquet stays the primary lake format."""
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)
+    df.write.mode(mode).orc(path)

@@ -6,8 +6,9 @@ Reference semantics -> Spark mapping implemented here:
 - T1 micro-batch ingestion (``consumer.py:143-166`` 5 s poll) ->
   ``trigger(processingTime="5 seconds")``
 - T3 at-least-once + replay (``consumer.py:50-52,169``)        ->
-  checkpointed ``foreachBatch`` with an idempotent parquet sink
-  (exactly-once-ish upgrade; at-least-once is the floor)
+  checkpointed ``foreachBatch`` parquet sink, also at-least-once: an
+  epoch replayed after a crash between the sink write and the commit
+  log appends its rows a second time
 - T4 three timestamps per record (``producer.py:77,81``,
   ``consumer.py:98``) -> event time ``ts`` + ``processed_timestamp``
   stamped in ``enrich``
@@ -237,7 +238,6 @@ def stateful_running_stats(
     df: DataFrame,
     key: str = "event_type",
     value: str = "value",
-    timeout_ms: int | None = None,
 ) -> DataFrame:
     """A12/T-custom — arbitrary stateful per-key aggregation via
     ``applyInPandasWithState``: keeps (count, sum) per key in the state
@@ -248,9 +248,8 @@ def stateful_running_stats(
 
     State is tiny (two scalars per key) and Arrow-batched per group, so
     at 1000 executors the cost is one key-shuffle per micro-batch —
-    the same bound as the built-in streaming aggregation.  With
-    ``timeout_ms`` set, idle keys are evicted (ProcessingTimeTimeout),
-    bounding state like a watermark would.
+    the same bound as the built-in streaming aggregation.  Keys are
+    never evicted (``GroupStateTimeout.NoTimeout``).
     """
     import pandas as pd  # local: Arrow path only, never on the driver's hot path
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -271,16 +270,11 @@ def stateful_running_stats(
     )
 
     def update(key_tuple, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
         count, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             count += len(pdf)
             total += float(pdf[value].fillna(0.0).sum())
         state.update((count, total))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
         yield pd.DataFrame(
             [
                 {
@@ -292,13 +286,8 @@ def stateful_running_stats(
             ]
         )
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return df.groupBy(key).applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
 
 
@@ -311,10 +300,13 @@ def run_to_partitioned_parquet(
     available_now: bool = False,
 ) -> StreamingQuery:
     """T8 — one streaming query appending partitioned parquet per
-    micro-batch via ``foreachBatch`` (idempotent per epoch thanks to
-    the checkpoint), replacing the reference's file-per-record sink +
-    separate re-read-everything batch job (consumer.py:66-77 +
-    spark_processor.py:59-64)."""
+    micro-batch via ``foreachBatch``, replacing the reference's
+    file-per-record sink + separate re-read-everything batch job
+    (consumer.py:66-77 + spark_processor.py:59-64).
+
+    At-least-once, not exactly-once: the append is not keyed by epoch,
+    so an epoch that the checkpoint replays (the sink wrote it but the
+    commit log never recorded it) lands twice."""
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         writer = batch.write.mode("append")
@@ -456,12 +448,12 @@ def run_cdc_apply(
     key: str,
     version_col: str,
     tie_break: str | None = None,
-    available_now: bool = True,
     keep_generations: int = 3,
 ) -> StreamingQuery:
     """Streaming CDC apply: maintain a keyed SNAPSHOT table from a
-    stream of versioned updates — each micro-batch is compacted to its
-    latest version per key, then merged with a VERSION GUARD: a base
+    stream of versioned updates, drained once with an ``availableNow``
+    trigger — each micro-batch is compacted to its latest version per
+    key, then merged with a VERSION GUARD: a base
     row is replaced only by a strictly newer update, so delivery order
     across micro-batches doesn't matter (last writer by version, not
     by arrival — the property the CDC permutation test pins).
@@ -564,12 +556,12 @@ def run_cdc_apply(
         finally:
             compact.unpersist()
 
-    stream = updates.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return (
+        updates.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()
 
 
 def _gen_seq(gen_dir: str) -> int:

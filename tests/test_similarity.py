@@ -289,6 +289,21 @@ def test_cosine_near_dup_gemm_degenerate_corpus_is_empty_frame(spark):
         assert out.count() == 0
 
 
+def test_cosine_near_dup_lsh_empty_input_is_empty_frame(spark):
+    # the hyperplane dimension comes from the first row; an empty input
+    # has none and must still yield zero pairs with the contract schema
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators.similarity import (
+        cosine_near_dup_lsh,
+    )
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = cosine_near_dup_lsh(empty, "vec_id", "embedding", 0.5)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("id_a", "bigint"), ("id_b", "bigint"), ("cosine_sim", "double"),
+    ]
+    assert out.count() == 0
+
+
 def test_gram_matrix_micros_matches_numpy(emb):
     import numpy as np
 
