@@ -37,8 +37,8 @@ def spread_small_input(df: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> Dat
     Streaming DataFrames are returned untouched (partition probes and
     size stats don't apply pre-execution).  The size probe uses the
     optimizer's stats via the private ``_jdf`` seam — if that JVM API
-    ever moves, the probe logs once and the helper degrades to a no-op
-    rather than failing the query.
+    ever moves, every call whose probe fails logs a warning and returns
+    ``df`` unchanged rather than failing the query.
     """
     if df.isStreaming:
         return df

@@ -141,6 +141,10 @@ def nn_label_confusion(
     the candidate generator changes, the confusion aggregation below
     is reused as-is.
 
+    Rows with a NULL embedding have no neighbor and are no one's
+    neighbor: both paths drop them, as :func:`cosine_near_dup_gemm`
+    does.
+
     Ranking compares the ROUNDED similarity so engine-level float
     drift can't flip the argmax between two near-tied neighbors
     (ties then resolve on the neighbor id in any engine).
@@ -167,7 +171,7 @@ def nn_label_confusion(
                 F.col(id_col).alias("_id"),
                 F.col(label_col).alias("_lbl"),
                 e.alias("_e"),
-            )
+            ).filter(F.col("_e").isNotNull())
         )
         .withColumn("_nrm", l2_norm(F.col("_e")))
         .select(
@@ -292,7 +296,7 @@ def _nn_label_confusion_gemm(
         F.col(id_col).alias("_id"),
         F.col(label_col).alias("_lbl"),
         _as_double_array(emb_col).alias("_e"),
-    )
+    ).filter(F.col("_e").isNotNull())
     n = narrow.count()
     if n <= 1:
         # empty corpus would crash np.stack; a singleton has no

@@ -1322,12 +1322,12 @@ def _fuse_pair_expr(t: Column, left: str, right: str, sep: str) -> Column:
 #: paths auto-switch to :func:`_ranked_fixpoint_apply`: the fold
 #: chain's unresolved lineage is only truncated at ACTION time, so
 #: Catalyst analyzes all R chained plans recursively at once — a
-#: StackOverflowError at R=256 on the default JVM stack (r11 probe,
-#: tools/probe_bpe_rules.py), and even below the crash point each
-#: rank is a full pass over its input (R passes, vs the fixpoint's
-#: ~max-symbols-per-row rounds).  24 keeps every oracle-gated plan
-#: (<= 3 rules) and every differential test (<= 16) on the proven
-#: fold-chain shape while staying far from the cliff.
+#: StackOverflowError at R=256 on the default JVM stack (SCALING.md,
+#: "r11: BPE apply-path scaling in MERGE-RULE count"), and even below
+#: the crash point each rank is a full pass over its input (R passes,
+#: vs the fixpoint's ~max-symbols-per-row rounds).  24 keeps every
+#: oracle-gated plan (<= 3 rules) and every differential test (<= 16)
+#: on the proven fold-chain shape while staying far from the cliff.
 BPE_APPLY_FOLD_MAX = 24
 
 
@@ -1564,8 +1564,8 @@ def _ranked_fixpoint_apply(
 #: largest rule table the SEQUENTIAL fold chain is known-safe for —
 #: the collision-table fallback bound of :func:`_apply_ranked_merges`.
 #: The Catalyst recursion cliff was measured at 256 chained ranks
-#: (StackOverflowError, tools/probe_bpe_rules.py); 128 leaves 2x
-#: headroom.
+#: (StackOverflowError; SCALING.md, "r11: BPE apply-path scaling in
+#: MERGE-RULE count"); 128 leaves 2x headroom.
 BPE_APPLY_SEQ_FALLBACK_MAX = 128
 
 

@@ -848,6 +848,15 @@ def test_nn_label_confusion_gemm_tiny_corpora(spark):
         [(1, [1.0, 0.0], 7)], "vec_id long, embedding array<double>, label int"
     )
     assert nn_label_confusion(one, "vec_id", "embedding", "label").count() == 0
+    # a NULL embedding drops out of both sides: no np.stack crash on the
+    # GEMM path, no arbitrary lowest-id neighbour on the window path
+    with_null = spark.createDataFrame(
+        [(1, [1.0, 0.0], "a"), (2, [0.9, 0.1], "a"), (3, [0.0, 1.0], "b"), (4, None, "b")],
+        "vec_id long, embedding array<double>, label string",
+    )
+    for gemm in (True, False):
+        got = nn_label_confusion(with_null, "vec_id", "embedding", "label", gemm=gemm)
+        assert sorted(tuple(r) for r in got.collect()) == [("a", "a", 2), ("b", "a", 1)]
 
 
 def test_decode_header_rejects_negative_width_and_clamps_int32(spark):
